@@ -29,12 +29,17 @@ from rottnest_spark.core.catalog import IndexCatalog
 from rottnest_spark.core.fs import LakeFS, LocalFS
 from rottnest_spark.core.layout import WHOLE_FILE, file_row_counts
 from rottnest_spark.core.planner import (
+    SearchPlan,
     binpack,
     group_mergeable,
     plan_search,
     unindexed_files,
 )
-from rottnest_spark.core.refine import collect_candidates_bounded, read_candidates
+from rottnest_spark.core.refine import (
+    collect_candidates_bounded,
+    read_candidates,
+    union_all,
+)
 from rottnest_spark.sources.reader import read_parquet
 from rottnest_spark.indices.base import BRUTE_FORCE, SparkIndex
 
@@ -133,11 +138,12 @@ class ParquetLake:
 
     # -- merge-on-read search hooks -------------------------------------------
     # Format-backed lakes in merge-on-read state (Iceberg positional
-    # deletes, Delta deletion vectors) refuse `.files` (an index over such
-    # files would surface ghost rows through paths that fetch rows blind,
-    # e.g. bm25_topk's stats rescoring). PREDICATE-style search stays exact
-    # anyway: index candidates are a superset, and refine applies BOTH the
-    # predicate and the delete state. These two hooks carry that contract —
+    # deletes, Delta deletion vectors) refuse `.files` (paths that treat
+    # files as fully live would surface ghost rows). PREDICATE-style search
+    # stays exact anyway: index candidates are a superset, and refine
+    # applies BOTH the predicate and the delete state; top-K search, whose
+    # corpus statistics would count deleted rows, refuses in `_plan`.
+    # These two hooks carry that contract —
     # `_search_files()` is the plan's file universe (deletes ignored:
     # files stay live), `_search_row_filter()` is None or a df→df function
     # that drops row-deleted rows (requires __path/__pos tags from
@@ -165,18 +171,27 @@ class ParquetLake:
         exact in-situ scan) until a physical rewrite."""
         return files
 
+    def _whole_file_units(self, columns: list[str] | None = None) -> bool:
+        """Whether candidate units must be fetched as whole files through
+        `read()` to surface `columns` (None: every column) — identity
+        here; Iceberg/Delta override for partition columns (path-encoded)
+        and column mapping (physical names in the data files)."""
+        return False
+
     def _read_candidate_units(
         self, cand_list, columns: list[str] | None = None
     ) -> DataFrame:
-        """Candidate-unit fetch with the lake's delete state applied."""
-        rf = self._search_row_filter()
-        df = read_candidates(
-            self.spark,
-            cand_list,
-            columns=columns,
-            tag_positions=rf is not None,
-        )
-        return rf(df) if rf is not None else df
+        """Candidate-unit fetch with the lake's delete state applied,
+        projected to `columns` (None: every column)."""
+        if self._whole_file_units(columns):
+            df = self.read(sorted({f for f, _rg in cand_list}))
+        else:
+            rf = self._search_row_filter()
+            df = read_candidates(
+                self.spark, cand_list, tag_positions=rf is not None
+            )
+            df = rf(df) if rf is not None else df
+        return df.select(*columns) if columns else df
 
     # -- L1: build ------------------------------------------------------------
 
@@ -315,6 +330,75 @@ class ParquetLake:
             raise err[0]
 
     # -- L2: search -----------------------------------------------------------
+    # Every search variant composes the same stages:
+    #   _plan   which catalog entries cover which files (+ in-situ remainder)
+    #   probe   the variant's own: one query, a batched probe, the conj
+    #           intersection, the disj union, footer zone maps
+    #   _fetch  bounded collect of the candidate units, then their read
+    #   refine  the index's exact predicate (`brute_force`) on every part
+
+    def _plan(
+        self,
+        index: SparkIndex,
+        column: str,
+        files: list[str] | None = None,
+        check_config: bool = True,
+    ) -> SearchPlan:
+        """Plan stage: the lake's one `plan_search` call, over `files`
+        (default: the search universe, `_search_files()`). Indexes without
+        a row predicate (top-K: BM25, vector) refuse on delete-bearing
+        snapshots (see `search`). `check_config=False` skips the
+        probe-vs-build config check, for IVF probes whose `nprobes` is a
+        query-time knob."""
+        if (
+            type(index).predicate is SparkIndex.predicate
+            and self._search_row_filter() is not None
+        ):
+            raise ValueError(
+                f"{index.index_type} has top-K semantics — its scores "
+                "depend on corpus statistics that would include "
+                "row-deleted rows; compact the merge-on-read state first "
+                "(iceberg_rewrite_deletes / delta_rewrite_deletes)"
+            )
+        return plan_search(
+            self.catalog,
+            index.index_type,
+            column,
+            self._search_files() if files is None else files,
+            expect_config=(
+                IndexCatalog.config_json(**index.config())
+                if check_config
+                else None
+            ),
+        )
+
+    def _fetch(
+        self,
+        cands,
+        files: list[str],
+        entry_files: set[str] = frozenset(),
+        columns: list[str] | None = None,
+    ) -> DataFrame | None:
+        """Fetch stage: the rows of `files` that may match, projected to
+        `columns` (None: every column), or None when no unit is a
+        candidate. `cands` is a probe's result — BRUTE_FORCE, or a
+        candidate frame collected here under `brute_force_threshold` from
+        at most threshold+1 rows (`entry_files`, the files the probed
+        entries name, decide the stale-entry liveness join) — or a unit
+        list a multi-index variant collected itself. BRUTE_FORCE and an
+        over-threshold collect (None) scan `files` whole."""
+        if isinstance(cands, DataFrame):
+            cands = collect_candidates_bounded(
+                cands, entry_files, set(files), self.brute_force_threshold
+            )
+        if cands is None or cands is BRUTE_FORCE:
+            df = self.read(files)
+            return df.select(*columns) if columns else df
+        return self._read_candidate_units(cands, columns) if cands else None
+
+    def _empty(self) -> DataFrame:
+        """A zero-row frame with the lake's columns."""
+        return self.read(self._search_files()[:1]).limit(0)
 
     def search(
         self,
@@ -331,57 +415,51 @@ class ParquetLake:
         are a superset and the refine applies the delete state
         (`_search_row_filter`). Top-K indexes refuse — their scores
         depend on corpus statistics that would include deleted rows."""
-        if (
-            self._search_row_filter() is not None
-            and index.predicate(column, query) is None
-        ):
-            raise ValueError(
-                f"{index.index_type} has top-K semantics — its scores "
-                "depend on corpus statistics that would include "
-                "row-deleted rows; compact the merge-on-read state first "
-                "(iceberg_rewrite_deletes / delta_rewrite_deletes)"
-            )
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
+        plan = self._plan(index, column)
+        cands = (
+            index.search(self.spark, plan.index_paths, query)
+            if plan.entries
+            else None
         )
+        return self._search_query(
+            index, column, query, plan, cands, k, columns, early_stop=True
+        )
+
+    def _search_query(
+        self,
+        index: SparkIndex,
+        column: str,
+        query,
+        plan: SearchPlan,
+        cands,
+        k: int | None,
+        columns: list[str] | None,
+        early_stop: bool,
+    ) -> DataFrame:
+        """One query's result from its plan and probe result (search,
+        search_many): the fetched candidates and the in-situ scan of the
+        unindexed files, each refined by the index's exact predicate.
+        `early_stop` (search) lets a k-bounded predicate search stop its
+        in-situ scan at k rows; search_many keeps the lazy scan."""
         parts: list[DataFrame] = []
-
         if plan.entries:
-            paths = [e["index_path"] for e in plan.entries]
-            cands = index.search(self.spark, paths, query)
-            if cands is BRUTE_FORCE:
-                parts.append(self.read(plan.covered_files))
-            else:
-                # Bounded collect: learn "over threshold" from at most
-                # threshold+1 rows, never the full candidate list.
-                cand_list = collect_candidates_bounded(
-                    cands,
-                    {f for e in plan.entries for f in e["file_paths"]},
-                    set(plan.covered_files),
-                    self.brute_force_threshold,
-                )
-                if cand_list is None:
-                    parts.append(self.read(plan.covered_files))
-                elif cand_list:
-                    parts.append(
-                        self._read_candidate_units(cand_list)
-                    )
-
+            fetched = self._fetch(cands, plan.covered_files, plan.entry_files)
+            if fetched is not None:
+                parts.append(fetched)
         if plan.unindexed_files:
             # in-situ scan of unindexed files (utils.py:248-275). With a
-            # row budget k and a predicate-style index, scan newest-first
-            # file BATCHES and stop as soon as k rows are found — the
-            # reference's reverse-batch early stop
+            # row budget k and a predicate-style index, `search` scans
+            # newest-first file BATCHES and stops as soon as k rows are
+            # found — the reference's reverse-batch early stop
             # (indices/logcloud_index.py:85-88): a huge unindexed tail
-            # costs opens only until the budget fills, not one open per
-            # file. Top-K indexes (BM25/vector) rank globally, so any-k
-            # early stop would be wrong for them — they take the full
-            # lazy path.
-            if k is not None and index.predicate(column, query) is not None:
+            # costs opens only until the budget fills. Top-K indexes
+            # (BM25/vector) rank globally, so any-k early stop would be
+            # wrong for them — they take the full lazy path.
+            if (
+                early_stop
+                and k is not None
+                and index.predicate(column, query) is not None
+            ):
                 parts.append(
                     self._insitu_topk(
                         plan.unindexed_files, index, column, query, k
@@ -389,15 +467,12 @@ class ParquetLake:
                 )
             else:
                 parts.append(self.read(plan.unindexed_files))
-
-        if not parts:
-            empty = self.read(self._search_files()[:1]).limit(0)
-            return index.brute_force(empty, column, query, k)
-
-        refined = [index.brute_force(p, column, query, None) for p in parts]
-        out = refined[0]
-        for r in refined[1:]:
-            out = out.unionByName(r)
+        out = union_all(
+            [
+                index.brute_force(p, column, query, None)
+                for p in parts or [self._empty()]
+            ]
+        )
         if columns:
             out = out.select(*columns)
         return out.limit(k) if k is not None else out
@@ -460,71 +535,24 @@ class ParquetLake:
         plan is computed once, and indexes exposing `search_many` (e.g.
         SubstringIndex) amortize their index scans across all queries —
         the loop below only assembles per-query candidate fetches."""
-        if (
-            self._search_row_filter() is not None
-            and queries
-            and index.predicate(column, queries[0]) is None
-        ):
-            raise ValueError(
-                f"{index.index_type} has top-K semantics — compact the "
-                "merge-on-read state first (iceberg_rewrite_deletes / "
-                "delta_rewrite_deletes)"
-            )
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
-        paths = [e["index_path"] for e in plan.entries]
-        if plan.entries and hasattr(index, "search_many"):
-            cands_by_q = index.search_many(self.spark, paths, queries)
-        elif plan.entries:
-            cands_by_q = {
-                q: index.search(self.spark, paths, q) for q in queries
-            }
+        plan = self._plan(index, column)
+        if not plan.entries:
+            cands_by_q = dict.fromkeys(queries)
+        elif hasattr(index, "search_many"):
+            cands_by_q = index.search_many(self.spark, plan.index_paths, queries)
         else:
-            cands_by_q = {}
-
-        outs: list[DataFrame] = []
-        for q in queries:
-            parts: list[DataFrame] = []
-            if plan.entries:
-                cands = cands_by_q[q]
-                if cands is BRUTE_FORCE:
-                    parts.append(self.read(plan.covered_files))
-                else:
-                    cand_list = collect_candidates_bounded(
-                        cands,
-                        {f for e in plan.entries for f in e["file_paths"]},
-                        set(plan.covered_files),
-                        self.brute_force_threshold,
-                    )
-                    if cand_list is None:
-                        parts.append(self.read(plan.covered_files))
-                    elif cand_list:
-                        parts.append(
-                            self._read_candidate_units(cand_list)
-                        )
-            if plan.unindexed_files:
-                parts.append(self.read(plan.unindexed_files))
-            if not parts:
-                empty = self.read(self._search_files()[:1]).limit(0)
-                parts = [empty]
-            refined = [index.brute_force(p, column, q, None) for p in parts]
-            one = refined[0]
-            for r in refined[1:]:
-                one = one.unionByName(r)
-            if columns:
-                one = one.select(*columns)
-            if k is not None:
-                one = one.limit(k)
-            outs.append(one.withColumn("__query__", F.lit(q)))
-        out = outs[0]
-        for o in outs[1:]:
-            out = out.unionByName(o)
-        return out
+            cands_by_q = {
+                q: index.search(self.spark, plan.index_paths, q) for q in queries
+            }
+        return union_all(
+            [
+                self._search_query(
+                    index, column, q, plan, cands_by_q[q], k, columns,
+                    early_stop=False,
+                ).withColumn("__query__", F.lit(q))
+                for q in queries
+            ]
+        )
 
     def search_conj(
         self,
@@ -555,13 +583,9 @@ class ParquetLake:
         candidate list is ever materialized on the driver. The final unit
         list is collected with the same bounded limit as single-index search."""
         cand_list, _ = self._conj_candidates(specs)
-
-        if cand_list is None:
-            out = self.read(self._search_files())
-        elif not cand_list:
-            out = self.read(self._search_files()[:1]).limit(0)
-        else:
-            out = self._read_candidate_units(cand_list)
+        out = self._fetch(cand_list, self._search_files())
+        if out is None:
+            out = self._empty()
         for index, column, query in specs:
             out = index.brute_force(out, column, query, None)
         # NOT-composition: exclusions cannot prune (the complement of a
@@ -627,7 +651,8 @@ class ParquetLake:
         for p in preds[1:]:
             disj = disj | p
 
-        live = set(self._search_files())
+        files = self._search_files()
+        live = set(files)
         union_cands: DataFrame | None = None
         whole_files: set[str] = set()  # files some spec leaves uncovered
         all_entry_files: set[str] = set()  # every file any probed entry names
@@ -646,17 +671,10 @@ class ParquetLake:
             grouped[gk][2].append(query)
 
         for index, column, queries in grouped.values():
-            plan = plan_search(
-                self.catalog,
-                index.index_type,
-                column,
-                self._search_files(),
-                expect_config=IndexCatalog.config_json(**index.config()),
-            )
+            plan = self._plan(index, column, files)
             if not plan.entries:
                 full_scan = True
                 break
-            paths = [e["index_path"] for e in plan.entries]
             # search_many handles point probes only — tuple (range)
             # queries keep the per-query search path
             if (
@@ -664,54 +682,41 @@ class ParquetLake:
                 and hasattr(index, "search_many")
                 and not any(isinstance(q, tuple) for q in queries)
             ):
-                by_q = index.search_many(self.spark, paths, queries)
+                by_q = index.search_many(self.spark, plan.index_paths, queries)
                 cand_frames = [by_q[q] for q in queries]
             else:
                 cand_frames = [
-                    index.search(self.spark, paths, q) for q in queries
+                    index.search(self.spark, plan.index_paths, q)
+                    for q in queries
                 ]
             if any(c is BRUTE_FORCE for c in cand_frames):
                 full_scan = True
                 break
-            all_entry_files |= {
-                f for e in plan.entries for f in e["file_paths"]
-            }
+            all_entry_files |= plan.entry_files
             whole_files |= live - set(plan.covered_files)
             for c in cand_frames:
                 union_cands = (
                     c if union_cands is None else union_cands.unionByName(c)
                 )
 
-        if full_scan:
-            out = self.read(self._search_files())
-        else:
-            # liveness: entries may cover files already replaced by a
-            # rewrite — semi-join candidates against live covered files,
-            # matching search() (collect_candidates_bounded triggers the
-            # join exactly when all_entry_files ⊋ covered)
-            cand_list = collect_candidates_bounded(
+        units = None  # full scan
+        if not full_scan:
+            units = collect_candidates_bounded(
                 union_cands.distinct(),
                 all_entry_files,
                 live - whole_files,
                 self.brute_force_threshold,
             )
-            if cand_list is None:
-                out = self.read(self._search_files())
-            else:
-                # whole-file admissions dominate row-group units of the
-                # same file (reading both would duplicate rows)
-                wholes = set(whole_files) | {
-                    f for f, rg in cand_list if rg == WHOLE_FILE
-                }
-                units = [(f, WHOLE_FILE) for f in sorted(wholes)] + [
-                    (f, rg)
-                    for f, rg in cand_list
-                    if rg != WHOLE_FILE and f not in wholes
-                ]
-                if units:
-                    out = self._read_candidate_units(units)
-                else:
-                    out = self.read(self._search_files()[:1]).limit(0)
+        if units is not None:
+            # whole-file admissions dominate row-group units of the
+            # same file (reading both would duplicate rows)
+            wholes = whole_files | {f for f, rg in units if rg == WHOLE_FILE}
+            units = [(f, WHOLE_FILE) for f in sorted(wholes)] + [
+                (f, rg) for f, rg in units if rg != WHOLE_FILE and f not in wholes
+            ]
+        out = self._fetch(units, files)
+        if out is None:
+            out = self._empty()
         out = out.filter(disj)
         if columns:
             out = out.select(*columns)
@@ -741,29 +746,20 @@ class ParquetLake:
     ) -> tuple[list[tuple[str, int]] | None, dict]:
         """Shared candidate computation for search_conj/explain_search_conj:
         (unit list | None when over threshold, diagnostics dict)."""
-        from pyspark.sql import functions as F
-
         # probe each spec; keep only the constraining ones
+        files = self._search_files()
         constraining: list[tuple[set[str], DataFrame]] = []
         for index, column, query in specs:
-            plan = plan_search(
-                self.catalog,
-                index.index_type,
-                column,
-                self._search_files(),
-                expect_config=IndexCatalog.config_json(**index.config()),
-            )
+            plan = self._plan(index, column, files)
             if not plan.entries:
                 continue
-            cands = index.search(
-                self.spark, [e["index_path"] for e in plan.entries], query
-            )
+            cands = index.search(self.spark, plan.index_paths, query)
             if cands is BRUTE_FORCE:
                 continue
             constraining.append((set(plan.covered_files), cands))
 
         # files no spec constrains are scanned whole (metadata-scale list)
-        live = set(self._search_files())
+        live = set(files)
         n_specs: dict[str, int] = {}
         for covered, _ in constraining:
             for f in covered & live:
@@ -824,11 +820,12 @@ class ParquetLake:
                 .select("file_path", "row_group")
             )
             inter = whole.unionByName(rg_rows)
-            rows = inter.limit(self.brute_force_threshold + 1).collect()
-            if len(rows) > self.brute_force_threshold:
-                cand_list = None  # unselective → scan everything live
-            else:
-                cand_list.extend((r["file_path"], r["row_group"]) for r in rows)
+            # stale candidates are already gone (inner join on n_specs)
+            rows = collect_candidates_bounded(
+                inter, set(), live, self.brute_force_threshold
+            )
+            # over threshold → unselective, scan everything live
+            cand_list = None if rows is None else cand_list + rows
 
         diag = {
             "n_specs": len(specs),
@@ -842,13 +839,7 @@ class ParquetLake:
         """Structured plan introspection (the reference prints its tier
         decisions at search time; this returns them): coverage split,
         candidate count, pruning ratio, and the execution decision."""
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
+        plan = self._plan(index, column)
         out = {
             "index_type": index.index_type,
             "column": column,
@@ -862,14 +853,10 @@ class ParquetLake:
         }
         if not plan.entries:
             return out
-        cands = index.search(
-            self.spark, [e["index_path"] for e in plan.entries], query
-        )
+        cands = index.search(self.spark, plan.index_paths, query)
         if cands is BRUTE_FORCE:
             out["decision"] = "brute_force_flag"
             return out
-        from pyspark.sql import functions as F
-
         # one aggregate — never materializes the candidate list driver-side
         stat = cands.agg(
             F.count("*").alias("n"),
@@ -908,14 +895,7 @@ class ParquetLake:
         from rottnest_spark.indices.sketches import StatsSketchIndex
 
         idx = index or StatsSketchIndex()
-        scope = files if files is not None else self.files
-        plan = plan_search(
-            self.catalog,
-            idx.index_type,
-            column,
-            scope,
-            expect_config=IndexCatalog.config_json(**idx.config()),
-        )
+        plan = self._plan(idx, column, files)
         if not plan.entries:
             return {
                 "estimate": None,
@@ -926,23 +906,11 @@ class ParquetLake:
             }
         out = StatsSketchIndex.estimate_distinct(
             self.spark,
-            [e["index_path"] for e in plan.entries],
+            plan.index_paths,
             files=plan.covered_files,
         )
         out["uncovered_files"] = len(plan.unindexed_files)
         return out
-
-    def _summary_plan(self, idx, column: str, files: list[str] | None):
-        from rottnest_spark.core.catalog import IndexCatalog as _IC
-
-        scope = files if files is not None else self.files
-        return plan_search(
-            self.catalog,
-            idx.index_type,
-            column,
-            scope,
-            expect_config=_IC.config_json(**idx.config()),
-        )
 
     def quantile_estimate(
         self,
@@ -957,7 +925,7 @@ class ParquetLake:
         from rottnest_spark.indices.sketches import QuantileSketchIndex
 
         idx = index or QuantileSketchIndex()
-        plan = self._summary_plan(idx, column, files)
+        plan = self._plan(idx, column, files)
         if not plan.entries:
             return {
                 "quantiles": {},
@@ -967,7 +935,7 @@ class ParquetLake:
             }
         out = QuantileSketchIndex.estimate_quantiles(
             self.spark,
-            [e["index_path"] for e in plan.entries],
+            plan.index_paths,
             quantiles,
             files=plan.covered_files,
         )
@@ -987,7 +955,7 @@ class ParquetLake:
         from rottnest_spark.indices.sketches import ThetaSketchIndex
 
         idx = index or ThetaSketchIndex()
-        plan = self._summary_plan(idx, column, list(files_a) + list(files_b))
+        plan = self._plan(idx, column, list(files_a) + list(files_b))
         if not plan.entries:
             return {
                 "a": 0,
@@ -998,7 +966,7 @@ class ParquetLake:
         covered = set(plan.covered_files)
         out = idx.estimate_overlap(
             self.spark,
-            [e["index_path"] for e in plan.entries],
+            plan.index_paths,
             [f for f in files_a if f in covered],
             [f for f in files_b if f in covered],
         )
@@ -1045,26 +1013,18 @@ class ParquetLake:
         counts alone (ExactIndex.count_key — no data fetch); only
         unindexed files pay a refine scan. Falls back to a refine count
         over covered files for indexes without index-only counting."""
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
+        plan = self._plan(index, column)
         total = 0
         if plan.entries:
-            paths = [e["index_path"] for e in plan.entries]
             n = None
             # index-ONLY counts include row-deleted rows — under
             # merge-on-read state fall back to the refine count, which
             # self.read() makes delete-exact
             if hasattr(index, "count_key") and self._search_row_filter() is None:
-                entry_files = {f for e in plan.entries for f in e["file_paths"]}
-                stale_possible = bool(entry_files - set(plan.covered_files))
+                stale_possible = bool(plan.entry_files - set(plan.covered_files))
                 n = index.count_key(
                     self.spark,
-                    paths,
+                    plan.index_paths,
                     query,
                     live_files=set(plan.covered_files)
                     if stale_possible
@@ -1091,13 +1051,7 @@ class ParquetLake:
         otherwise. The 100 TB win: a GROUP BY over the whole lake becomes
         an aggregation of the key table (≤ one row per distinct
         (key, unit)) — data-proportional only in distinct keys."""
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            self._search_files(),
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
+        plan = self._plan(index, column)
         parts: list[DataFrame] = []
         covered_counted = False
         # index-only key counts include row-deleted rows — merge-on-read
@@ -1107,10 +1061,10 @@ class ParquetLake:
             and getattr(index, "store_keys", False)
             and self._search_row_filter() is None
         ):
-            paths = [e["index_path"] for e in plan.entries]
-            keys = self.spark.read.parquet(*[f"{p}/keys" for p in paths])
-            entry_files = {f for e in plan.entries for f in e["file_paths"]}
-            if entry_files - set(plan.covered_files):
+            keys = self.spark.read.parquet(
+                *[f"{p}/keys" for p in plan.index_paths]
+            )
+            if plan.entry_files - set(plan.covered_files):
                 from rottnest_spark.core.smalldf import local_df
 
                 live_df = local_df(
@@ -1130,10 +1084,7 @@ class ParquetLake:
                     F.col(column).alias("key"), F.lit(1).alias("cnt")
                 )
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        hist = out.groupBy("key").agg(F.sum("cnt").alias("n_rows"))
+        hist = union_all(parts).groupBy("key").agg(F.sum("cnt").alias("n_rows"))
         if k is not None:
             hist = hist.orderBy(F.desc("n_rows"), F.asc("key")).limit(k)
         return hist
@@ -1151,19 +1102,23 @@ class ParquetLake:
         full scan. The no-catalog fallback path for lakes that haven't
         built an ExactIndex yet (reference virtual mode,
         backends/utils.py:110-126)."""
+        return self._footer_zone_search(
+            column, lo, hi, F.col(column).between(F.lit(lo), F.lit(hi)), columns
+        )
+
+    def _footer_zone_search(
+        self, column: str, lo, hi, pred, columns, prefix: bool = False
+    ) -> DataFrame:
+        """search_range_virtual's body, shared with lookup_prefix: footer
+        zone maps name the candidate units, `pred` refines."""
         from rottnest_spark.core.layout import footer_zone_candidates
 
-        cands = footer_zone_candidates(self.spark, self._search_files(), column, lo, hi)
-        cand_list = collect_candidates_bounded(
-            cands, set(), set(self._search_files()), self.brute_force_threshold
+        files = self._search_files()
+        cands = footer_zone_candidates(
+            self.spark, files, column, lo, hi, prefix=prefix
         )
-        if cand_list is None:
-            rows = self.read()
-        elif cand_list:
-            rows = self._read_candidate_units(cand_list)
-        else:
-            rows = self.read(self._search_files()[:1]).limit(0)
-        out = rows.filter(F.col(column).between(F.lit(lo), F.lit(hi)))
+        rows = self._fetch(cands, files)
+        out = (self._empty() if rows is None else rows).filter(pred)
         return out.select(*columns) if columns else out
 
     def maintenance_report(
@@ -1602,22 +1557,10 @@ class ParquetLake:
 
         if self.catalog.entries_for("exact", column):
             return self.search(PrefixSearch(), column, prefix, columns=columns)
-        from rottnest_spark.core.layout import footer_zone_candidates
-
-        cands = footer_zone_candidates(
-            self.spark, self._search_files(), column, prefix, None, prefix=True
+        return self._footer_zone_search(
+            column, prefix, None, F.col(column).startswith(F.lit(prefix)),
+            columns, prefix=True,
         )
-        cand_list = collect_candidates_bounded(
-            cands, set(), set(self._search_files()), self.brute_force_threshold
-        )
-        if cand_list is None:
-            rows = self.read()
-        elif cand_list:
-            rows = self._read_candidate_units(cand_list)
-        else:
-            rows = self.read(self._search_files()[:1]).limit(0)
-        out = rows.filter(F.col(column).startswith(F.lit(prefix)))
-        return out.select(*columns) if columns else out
 
     def refresh_indices(
         self, orphan_min_age_sec: float = 0.0, timeout: float | None = None
@@ -1887,18 +1830,10 @@ class ParquetLake:
         files = self.files
         # candidate FILES via the search plan (row groups widen to files:
         # rewrites are per-file)
-        plan = plan_search(
-            self.catalog,
-            index.index_type,
-            column,
-            files,
-            expect_config=IndexCatalog.config_json(**index.config()),
-        )
+        plan = self._plan(index, column, files)
         touched = set(files) - set(plan.covered_files)  # in-situ: must check
         if plan.entries:
-            cands = index.search(
-                self.spark, [e["index_path"] for e in plan.entries], query
-            )
+            cands = index.search(self.spark, plan.index_paths, query)
             if cands is BRUTE_FORCE:
                 touched = set(files)
             else:

@@ -57,6 +57,14 @@ class SearchPlan:
     entries: list[dict] = field(default_factory=list)  # catalog entries to probe
     covered_files: list[str] = field(default_factory=list)
     unindexed_files: list[str] = field(default_factory=list)
+    # every file the entries name: more than covered_files when an entry
+    # still references files since removed from the lake (stale until
+    # vacuum), which is when candidate collects must semi-join liveness
+    entry_files: set[str] = field(default_factory=set)
+
+    @property
+    def index_paths(self) -> list[str]:
+        return [e["index_path"] for e in self.entries]
 
 
 def plan_search(
@@ -86,6 +94,7 @@ def plan_search(
                     f"parameters"
                 )
             plan.entries.append(e)
+            plan.entry_files.update(e["file_paths"])
             covered.update(useful)
     plan.covered_files = sorted(covered)
     plan.unindexed_files = sorted(lake - covered)

@@ -2,6 +2,16 @@
 `read_indexed_pages` (src/formats/parquet.rs:430-648) and
 `get_result_from_index_result` (backends/utils.py:147-185).
 
+These are the fetch stage's primitives, and only `ParquetLake`
+(core/lake.py) calls `collect_candidates_bounded` and `read_candidates`:
+every search variant, BM25 and IVF top-K included, fetches through
+`ParquetLake._fetch` (bounded collect, then the candidate-unit read) or,
+for a unit list collected its own way, the lake's `_read_candidate_units`
+hook — `read_candidates` plus the lake's delete state, or a whole-file
+`read()` where Iceberg/Delta need one for the columns asked for
+(`_whole_file_units`: partition columns, column mapping). `read_rows_at`
+serves the PQ/graph row-precision rerank.
+
 Two fetch paths, chosen by candidate granularity:
 
 - **file granularity** (row_group == -1): `spark.read.parquet(*files)` — the
@@ -18,6 +28,7 @@ predicate, which is what makes index pruning invisible to correctness.
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator
 
 import pandas as pd
@@ -43,6 +54,11 @@ def _us_schema(arrow_schema):
             f = f.with_type(pa.timestamp("us", tz=f.type.tz))
         fields.append(f)
     return pa.schema(fields)
+
+
+def union_all(frames: list[DataFrame]) -> DataFrame:
+    """Union by column name: the parts of one candidate row set."""
+    return functools.reduce(DataFrame.unionByName, frames)
 
 
 def collect_candidates_bounded(

@@ -20,10 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 #: sentinel returned by search() when the index cannot prune for this query
 BRUTE_FORCE = "__BRUTE_FORCE_EVERYTHING__"
 
-#: schema of the candidates DataFrame returned by search()
-CANDIDATE_COLS = ["file_path", "row_group"]
-
-
 class SparkIndex(ABC):
     """One index type. Stateless aside from build knobs; all data lives in
     the index Parquet directory + the catalog."""

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rottnest_spark.core.layout import WHOLE_FILE
+from rottnest_spark.core.refine import union_all
 from rottnest_spark.indices.base import SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
 from rottnest_spark.sources.reader import read_parquet
@@ -454,25 +455,13 @@ def bm25_topk(
     query token. With expansion_tokens > 0 (X7), the query grows to its
     nearest index-vocabulary tokens, similarity-weighted — exact for the
     expanded token set."""
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import read_candidates
-
-    from rottnest_spark.core.catalog import IndexCatalog
-
     spark = lake.spark
     toks = index.tokenizer.query_tokens(query)
     weights = None
-    plan = plan_search(
-        lake.catalog,
-        index.index_type,
-        column,
-        lake.files,
-        expect_config=IndexCatalog.config_json(**index.config()),
-    )
+    plan = lake._plan(index, column)
+    cols = list(dict.fromkeys([id_col, column]))
     if expansion_tokens and plan.entries:
-        vocab = spark.read.parquet(
-            *[f"{e['index_path']}/stats" for e in plan.entries]
-        )
+        vocab = spark.read.parquet(*[f"{p}/stats" for p in plan.index_paths])
         weights = expand_query(
             spark, query, vocab, expansion_tokens, qtoks=toks
         )
@@ -482,24 +471,16 @@ def bm25_topk(
     cand_parts: list[DataFrame] = []
 
     if plan.entries:
-        paths = [e["index_path"] for e in plan.entries]
-        st, n, tl = index.stats(spark, paths, toks)
+        st, n, tl = index.stats(spark, plan.index_paths, toks)
         stat_parts.append(st)
         n_docs += n
         total_len += tl
-        cands = index.search_tokens(spark, paths, toks)
-        from rottnest_spark.core.refine import collect_candidates_bounded
-
-        cand_list = collect_candidates_bounded(
-            cands,
-            {f for e in plan.entries for f in e["file_paths"]},
-            set(plan.covered_files),
-            lake.brute_force_threshold,
+        cands = index.search_tokens(spark, plan.index_paths, toks)
+        fetched = lake._fetch(
+            cands, plan.covered_files, plan.entry_files, cols
         )
-        if cand_list is None:  # over threshold — never materialized
-            cand_parts.append(lake.read(plan.covered_files))
-        elif cand_list:
-            cand_parts.append(read_candidates(spark, cand_list))
+        if fetched is not None:
+            cand_parts.append(fetched)
 
     if plan.unindexed_files:
         raw = lake.read(plan.unindexed_files)
@@ -509,22 +490,16 @@ def bm25_topk(
         stat_parts.append(st)
         n_docs += n
         total_len += tl
-        cand_parts.append(raw)
+        cand_parts.append(raw.select(*cols))
 
     if not cand_parts:
-        empty = lake.read(lake.files[:1]).limit(0)
-        return empty.select(id_col).withColumn("score", F.lit(0.0))
+        return lake._empty().select(id_col).withColumn("score", F.lit(0.0))
 
-    stats_df = stat_parts[0]
-    for s in stat_parts[1:]:
-        stats_df = stats_df.unionByName(s)
-    stats_df = stats_df.groupBy("token").agg(F.sum("df").alias("df"))
-
-    rows = cand_parts[0]
-    for c in cand_parts[1:]:
-        rows = rows.unionByName(c)
+    stats_df = (
+        union_all(stat_parts).groupBy("token").agg(F.sum("df").alias("df"))
+    )
     return score_rows(
-        rows, column, toks, stats_df, n_docs, total_len,
+        union_all(cand_parts), column, toks, stats_df, n_docs, total_len,
         id_col=id_col, k=k, weights=weights,
         tok_col_fn=index.tokenizer.tokens_col,
     )
@@ -544,33 +519,30 @@ def bm25_topk_many(
     data by construction). Per-query results ≡ bm25_topk(query), tagged
     `__query__`. The bulk-retrieval shape (RAG eval sets, alert sweeps)
     where at 100 TB the index scans dominate a single query's cost."""
-    from rottnest_spark.core.catalog import IndexCatalog
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import (
-        collect_candidates_bounded,
-        read_candidates,
-    )
-
     spark = lake.spark
     toks_by_q = {q: index.tokenizer.query_tokens(q) for q in queries}
     union_toks = sorted({t for ts in toks_by_q.values() for t in ts})
-    plan = plan_search(
-        lake.catalog,
-        index.index_type,
-        column,
-        lake.files,
-        expect_config=IndexCatalog.config_json(**index.config()),
-    )
+    plan = lake._plan(index, column)
+    cols = list(dict.fromkeys([id_col, column]))
+
+    def no_rows() -> DataFrame:
+        return (
+            lake._empty()
+            .select(id_col)
+            .withColumn("score", F.lit(0.0))
+            .withColumn("__query__", F.lit(""))
+        )
 
     stat_parts, n_docs, total_len = [], 0, 0
     probe = None
     if plan.entries:
-        paths = [e["index_path"] for e in plan.entries]
-        st, n, tl = index.stats(spark, paths, union_toks)
+        st, n, tl = index.stats(spark, plan.index_paths, union_toks)
         stat_parts.append(st)
         n_docs += n
         total_len += tl
-        postings = spark.read.parquet(*[f"{p}/postings" for p in paths])
+        postings = spark.read.parquet(
+            *[f"{p}/postings" for p in plan.index_paths]
+        )
         # one probe scan serves every query's candidate intersection
         probe = (
             postings.filter(F.col("token").isin(union_toks))
@@ -589,17 +561,12 @@ def bm25_topk_many(
         total_len += tl
 
     if not stat_parts:
-        empty = lake.read(lake.files[:1]).limit(0)
-        return (
-            empty.select(id_col)
-            .withColumn("score", F.lit(0.0))
-            .withColumn("__query__", F.lit(""))
-        )
-    stats_df = stat_parts[0]
-    for s in stat_parts[1:]:
-        stats_df = stats_df.unionByName(s)
+        return no_rows()
     stats_df = (
-        stats_df.groupBy("token").agg(F.sum("df").alias("df")).localCheckpoint()
+        union_all(stat_parts)
+        .groupBy("token")
+        .agg(F.sum("df").alias("df"))
+        .localCheckpoint()
     )
 
     outs: list[DataFrame] = []
@@ -612,36 +579,18 @@ def bm25_topk_many(
                 .select("file_path", "row_group")
                 .distinct()
             )
-            cand_list = collect_candidates_bounded(
-                cands,
-                {f for e in plan.entries for f in e["file_paths"]},
-                set(plan.covered_files),
-                lake.brute_force_threshold,
+            fetched = lake._fetch(
+                cands, plan.covered_files, plan.entry_files, cols
             )
-            if cand_list is None:
-                cand_parts.append(lake.read(plan.covered_files))
-            elif cand_list:
-                cand_parts.append(read_candidates(spark, cand_list))
+            if fetched is not None:
+                cand_parts.append(fetched)
         if raw is not None:
-            cand_parts.append(raw)
+            cand_parts.append(raw.select(*cols))
         if not cand_parts:
             continue
-        rows = cand_parts[0]
-        for c in cand_parts[1:]:
-            rows = rows.unionByName(c)
         scored = score_rows(
-            rows, column, toks, stats_df, n_docs, total_len,
+            union_all(cand_parts), column, toks, stats_df, n_docs, total_len,
             id_col=id_col, k=k, tok_col_fn=index.tokenizer.tokens_col,
         )
         outs.append(scored.withColumn("__query__", F.lit(q)))
-    if not outs:
-        empty = lake.read(lake.files[:1]).limit(0)
-        return (
-            empty.select(id_col)
-            .withColumn("score", F.lit(0.0))
-            .withColumn("__query__", F.lit(""))
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+    return union_all(outs) if outs else no_rows()

@@ -51,16 +51,6 @@ def provenance_file_col():
     return uri_path_col(F.col("_metadata.file_path"))
 
 
-def char_ngrams(col, n: int):
-    """Distinct character n-grams of a string column as an array (used by
-    callers that need the per-row array; the index build uses the faster
-    flat-position form — transform() lambdas evaluate interpreted)."""
-    starts = F.when(
-        F.length(col) >= n, F.sequence(F.lit(1), F.length(col) - F.lit(n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(F.transform(starts, lambda i: col.substr(i, F.lit(n))))
-
-
 #: regex metacharacters; escaping one of these yields a literal char
 _RE_SPECIAL = set(".^$*+?()[]{}|\\/-")
 

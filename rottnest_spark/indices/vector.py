@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rottnest_spark.core.layout import WHOLE_FILE
+from rottnest_spark.core.refine import union_all
 from rottnest_spark.indices.base import SparkIndex
 from rottnest_spark.indices.substring import provenance_file_col
 from rottnest_spark.sources.reader import read_parquet
@@ -718,50 +719,36 @@ def knn_topk(
     """Lake-level KNN: IVF-pruned (default) or exact full-scan (`exact=True`).
     Unindexed files are always scanned in-situ. Returns (id_col, dist),
     deterministically ordered by (dist, id)."""
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import read_candidates
-
     spark = lake.spark
     query_vec = list(query_vec)
-    plan = plan_search(lake.catalog, index.index_type, column, lake.files)
+    # nprobes is a query-time knob: no build-config check
+    plan = lake._plan(index, column, check_config=False)
+    cols = list(dict.fromkeys([id_col, column]))
     parts: list[DataFrame] = []
 
     if exact or not plan.entries:
         parts.append(lake.read())
-    elif index.row_precision:
-        # 3-stage: probe -> approximate top-refine row addresses (PQ codes
-        # or Vamana graph) -> exact rerank of ONLY those rows
-        from rottnest_spark.core.refine import read_rows_at
-
-        paths = [e["index_path"] for e in plan.entries]
-        triples = index.search_pq(spark, paths, query_vec)
-        if triples:
-            parts.append(read_rows_at(spark, triples))
-        if plan.unindexed_files:
-            parts.append(lake.read(plan.unindexed_files))
     else:
-        paths = [e["index_path"] for e in plan.entries]
-        cands = index.search(spark, paths, query_vec)
-        from rottnest_spark.core.refine import collect_candidates_bounded
+        if index.row_precision:
+            # 3-stage: probe -> approximate top-refine row addresses (PQ
+            # codes or Vamana graph) -> exact rerank of ONLY those rows
+            from rottnest_spark.core.refine import read_rows_at
 
-        cand_list = collect_candidates_bounded(
-            cands,
-            {f for e in plan.entries for f in e["file_paths"]},
-            set(plan.covered_files),
-            lake.brute_force_threshold,
-        )
-        if cand_list is None:  # unselective probe — scan covered instead
-            parts.append(lake.read(plan.covered_files))
-        elif cand_list:
-            parts.append(read_candidates(spark, cand_list))
+            triples = index.search_pq(spark, plan.index_paths, query_vec)
+            fetched = read_rows_at(spark, triples) if triples else None
+        else:
+            cands = index.search(spark, plan.index_paths, query_vec)
+            fetched = lake._fetch(
+                cands, plan.covered_files, plan.entry_files, cols
+            )
+        if fetched is not None:
+            parts.append(fetched)
         if plan.unindexed_files:
             parts.append(lake.read(plan.unindexed_files))
 
     if not parts:  # empty probe result and fully-covered lake
-        parts.append(lake.read().limit(0))
-    rows = parts[0]
-    for p in parts[1:]:
-        rows = rows.unionByName(p)
+        parts.append(lake._empty())
+    rows = union_all([p.select(*cols) for p in parts])
     return (
         ensure_float_vectors(rows, column)
         .select(id_col, l2_dist_col(column, query_vec).alias("dist"))
@@ -794,24 +781,22 @@ def knn_topk_many(
     one candidate fetch covers the union of units; distances are computed
     per (row, query) only for queries whose candidate set contains the
     row's unit."""
-    from rottnest_spark.core.planner import plan_search
-    from rottnest_spark.core.refine import read_candidates
-    from rottnest_spark.sources.reader import read_parquet
-
     spark = lake.spark
     qitems = sorted(queries.items())
-    plan = plan_search(lake.catalog, index.index_type, column, lake.files)
+    plan = lake._plan(index, column, check_config=False)
+    cols = list(dict.fromkeys([id_col, column]))
 
     if plan.entries and not getattr(index, "has_postings", True):
         # graph indexes (Vamana) have no postings table to batch over —
         # each query's beam search is its own bounded job; union tagged
-        out = None
-        for name, vec in qitems:
-            one = knn_topk(lake, index, column, vec, k, id_col).withColumn(
-                "__query__", F.lit(name)
-            )
-            out = one if out is None else out.unionByName(one)
-        return out
+        return union_all(
+            [
+                knn_topk(lake, index, column, vec, k, id_col).withColumn(
+                    "__query__", F.lit(name)
+                )
+                for name, vec in qitems
+            ]
+        )
 
     def topk(scored: DataFrame) -> DataFrame:
         from pyspark.sql.window import Window
@@ -842,7 +827,7 @@ def knn_topk_many(
         return topk(scored)
 
     # IVF: per-query probes -> one tagged postings scan -> union fetch
-    paths = [e["index_path"] for e in plan.entries]
+    paths = plan.index_paths
     probe_map: dict[tuple[str, int], list[str]] = {}
     for qid, vec in qitems:
         for p, cid in index.nearest_centroids(spark, paths, list(vec)):
@@ -874,6 +859,14 @@ def knn_topk_many(
             for qid in probe_map.get((p, r["centroid_id"]), []):
                 unit_q.setdefault(unit, set()).add(qid)
 
+    if lake._whole_file_units(cols):
+        # the lake fetches whole files: every unit of a file must share
+        # one query set, or each chunk holding the file repeats its rows
+        by_file: dict[str, set[str]] = {}
+        for (f, _rg), qs in unit_q.items():
+            by_file.setdefault(f, set()).update(qs)
+        unit_q = {unit: by_file[unit[0]] for unit in unit_q}
+
     parts: list[DataFrame] = []
     if unit_q:
         # group units by the SET of queries interested in them: one fetch
@@ -883,25 +876,24 @@ def knn_topk_many(
         for unit, qs in unit_q.items():
             by_qset.setdefault(tuple(sorted(qs)), []).append(unit)
         for qset, units in sorted(by_qset.items()):
-            chunk = read_candidates(spark, sorted(units)).withColumn(
+            chunk = lake._read_candidate_units(sorted(units), cols).withColumn(
                 "__qids__", F.array(*[F.lit(q) for q in qset])
             )
             parts.append(chunk)
     if plan.unindexed_files:
         all_q = F.array(*[F.lit(qid) for qid, _ in qitems])
         parts.append(
-            lake.read(plan.unindexed_files).withColumn("__qids__", all_q)
+            lake.read(plan.unindexed_files)
+            .select(*cols)
+            .withColumn("__qids__", all_q)
         )
     if not parts:
         parts.append(
-            lake.read().limit(0).withColumn(
-                "__qids__", F.array().cast("array<string>")
-            )
+            lake._empty()
+            .select(*cols)
+            .withColumn("__qids__", F.array().cast("array<string>"))
         )
-    rows = parts[0]
-    for p in parts[1:]:
-        rows = rows.unionByName(p)
-    rows = ensure_float_vectors(rows, column)
+    rows = ensure_float_vectors(union_all(parts), column)
     # distance only for (row, query) pairs the pruning admitted
     dist = None
     for qid, vec in qitems:

@@ -102,11 +102,6 @@ def synthesize_media(
     )
 
 
-def _decode_fake(payload: bytes) -> np.ndarray:
-    h, w = struct.unpack("<HH", payload[4:8])
-    return np.frombuffer(payload[8 : 8 + h * w], dtype=np.uint8).reshape(h, w)
-
-
 def _decode_real(payload: bytes) -> np.ndarray:
     # STUB for MP4 frame decode only (H.264 needs libav, not in this
     # container; container METADATA parses for real — parse_mp4_meta).

@@ -1330,7 +1330,7 @@ class DeltaSnapshotLake(ParquetLake):
     # narrow files AT the widened logical type (Spark's parquet up-cast
     # / arrow cast per batch). Index keys and zone stats then agree with
     # what read() surfaces. Everything not yet routed through the pin
-    # (top-K via `.files`, lookup/read_rows_at) still refuses loudly.
+    # (top-K search, lookup/read_rows_at) still refuses loudly.
 
     def _widen_scope(self):
         import contextlib
@@ -1368,7 +1368,7 @@ class DeltaSnapshotLake(ParquetLake):
     # searches stay EXACT on DV-bearing snapshots — plan over the data
     # files (vectors ignored: files stay live, index entries stay valid
     # as supersets), refine anti-joins the decoded deleted positions.
-    # Top-K paths still refuse via `.files`.
+    # Top-K search refuses in `ParquetLake._plan`.
     def _search_files(self) -> list[str]:
         from rottnest_spark.sources.reader import pinned_read_schema
 
@@ -1416,18 +1416,16 @@ class DeltaSnapshotLake(ParquetLake):
 
         return rf
 
-    def _read_candidate_units(self, cand_list, columns=None):
-        """Partitioned tables reconstruct partition columns per file, and
-        column-mapped tables need the physical→logical rename — both
+    def _whole_file_units(self, columns=None) -> bool:
+        """Column-mapped tables need the physical→logical rename, and a
+        partition column asked for is reconstructed per file — both
         degrade candidate units to FILE granularity through self.read()
-        (correct columns + delete state; plain unpartitioned tables keep
-        the row-group-precise base path)."""
-        pcols = list((self._table_meta() or {}).get("partitionColumns") or [])
-        if not pcols and not self._cmap():
-            return super()._read_candidate_units(cand_list, columns)
-        files = sorted({f for f, _rg in cand_list})
-        df = self.read(files)
-        return df.select(*columns) if columns else df
+        (correct columns + delete state); otherwise the row-group-precise
+        base path serves."""
+        pcols = set((self._table_meta() or {}).get("partitionColumns") or [])
+        return bool(
+            self._cmap() or (pcols if columns is None else pcols & set(columns))
+        )
 
     def build_index(self, index, column: str, *a, **kw):
         """Partition columns are path-encoded, not physical — an index

@@ -1200,34 +1200,6 @@ def position_delete_pairs_df(spark, state: dict, location: str, table_path: str)
     return out
 
 
-def apply_position_deletes(
-    spark, df, delete_files: list[str], location: str = "", table_path: str = ""
-):
-    """Apply Iceberg positional delete files to a DataFrame that was read
-    WITH Spark's `_metadata` file column still reachable: one distributed
-    left-anti join on (normalized file path, row position). The delete
-    files' `file_path` column records absolute paths (as manifests do),
-    rebased from `location` onto `table_path` for relocated tables;
-    `_metadata.file_path` is a file: URI — both sides normalize to a bare
-    absolute path. Plan shape: delete sets are a small fraction of data
-    rows, and AQE broadcast-converts the anti-join when they fit."""
-    from pyspark.sql import functions as F
-
-    norm = lambda c: F.regexp_replace(c, "^file:/+", "/")  # noqa: E731
-    pairs = delete_pairs_df(
-        spark, delete_files, location=location, table_path=table_path
-    )
-    tagged = df.withColumns(
-        {
-            "__del_path": _uri_path(F.col("_metadata.file_path")),
-            "__del_pos": F.col("_metadata.row_index"),
-        }
-    )
-    return tagged.join(pairs, ["__del_path", "__del_pos"], "left_anti").drop(
-        "__del_path", "__del_pos"
-    )
-
-
 def _snapshot_state(md: dict, snap: dict, table_path: str, fs=None) -> dict:
     """Walk one snapshot's manifest list → manifests → files, returning
     the full live state:
@@ -1646,7 +1618,8 @@ class IcebergSnapshotLake(ParquetLake):
     # searches stay EXACT on delete-bearing snapshots — the plan runs
     # over the data files (deletes ignored: files stay live, index
     # entries stay valid as supersets) and the refine anti-joins the
-    # positional delete pairs. Top-K paths still refuse via `.files`.
+    # positional delete pairs. Top-K search refuses in
+    # `ParquetLake._plan`.
     def _search_files(self) -> list[str]:
         data, _ = self._files_and_deletes()
         return data
@@ -1686,17 +1659,13 @@ class IcebergSnapshotLake(ParquetLake):
 
         return rf
 
-    def _read_candidate_units(self, cand_list, columns=None):
-        """Partitioned tables reconstruct identity partition columns per
-        file — candidate units degrade to FILE granularity through
-        self.read() (correct columns + delete state); unpartitioned
-        tables keep the row-group-precise base path."""
-        pcols = partition_columns_from_metadata(self._table_metadata())
-        if not pcols:
-            return super()._read_candidate_units(cand_list, columns)
-        files = sorted({f for f, _rg in cand_list})
-        df = self.read(files)
-        return df.select(*columns) if columns else df
+    def _whole_file_units(self, columns=None) -> bool:
+        """A partition column asked for is reconstructed per file —
+        candidate units then degrade to FILE granularity through
+        self.read() (correct columns + delete state); otherwise the
+        row-group-precise base path serves."""
+        pcols = set(partition_columns_from_metadata(self._table_metadata()))
+        return bool(pcols if columns is None else pcols & set(columns))
 
     def _indexable_files(self, column: str, files: list[str]) -> list[str]:
         """Schema-evolution guard for index builds (round 11): once the

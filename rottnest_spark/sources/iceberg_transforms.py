@@ -35,9 +35,6 @@ from __future__ import annotations
 
 import re
 
-_SUPPORTED = ("identity", "year", "month", "day", "hour", "bucket", "truncate")
-
-
 def murmur3_32(data: bytes, seed: int = 0) -> int:
     """Murmur3 x86 32-bit of `data` — signed int32, matching the spec's
     Appendix B test vectors (e.g. hashBytes(utf8('iceberg')) ==

@@ -478,15 +478,6 @@ def _partition_fields(md: dict | None) -> list[dict]:
     return partition_fields_from_spec(md or {})
 
 
-def _identity_partition_fields(md: dict | None) -> list[str]:
-    """Identity-transform partition column names, validating the WHOLE
-    spec is writable (transform set above). READS are unaffected and go
-    through iceberg.partition_columns_from_metadata, which may
-    legitimately ignore non-identity transforms (their source columns
-    stay physical in the data files)."""
-    return [pf["name"] for pf in _partition_fields(md) if pf["kind"] == "identity"]
-
-
 def _commit_snapshot(
     table_path: str,
     live: list[str],

@@ -37,11 +37,7 @@ import zlib
 
 import numpy as np
 
-from rottnest_spark.sources.roaring import (
-    PORTABLE_MAGIC,
-    roaring64_decode,
-    roaring64_encode,
-)
+from rottnest_spark.sources.roaring import PORTABLE_MAGIC, roaring64_encode
 
 MAGIC = b"PFA1"
 DV_MAGIC = bytes((0xD1, 0xD3, 0x39, 0x64))
@@ -51,11 +47,6 @@ DV_BLOB_TYPE = "deletion-vector-v1"
 def iceberg_vector_encode(positions) -> bytes:
     """Row positions → the spec's portable 64-bit roaring bytes."""
     return roaring64_encode(positions)[4:]  # drop Delta's int32 magic
-
-
-def iceberg_vector_decode(data: bytes) -> np.ndarray:
-    """Portable 64-bit roaring bytes → sorted uint64 positions."""
-    return roaring64_decode(struct.pack("<i", PORTABLE_MAGIC) + bytes(data))
 
 
 def encode_dv_blob(positions) -> bytes:
@@ -213,11 +204,6 @@ def make_puffin_dv_decoder():
 
 
 _DECODE = make_puffin_dv_decoder()
-
-
-def read_puffin_footer(data: bytes) -> dict:
-    """Parsed footer payload ({"blobs": [...], "properties": {...}})."""
-    return _DECODE.footer(data)
 
 
 def puffin_dv_positions(

@@ -13,6 +13,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from rottnest_spark.indices.bm25 import BM25Index, bm25_topk
 from rottnest_spark.indices.exact import ExactIndex
 from rottnest_spark.indices.substring import SubstringIndex
 from rottnest_spark.sources.changes import delta_snapshot_diff
@@ -132,10 +133,21 @@ def test_mapped_search_equals_plain_twin(spark, twins):
         results[name + "_exact"] = sorted(
             map(tuple, lake.search(eidx, "k", 42).collect())
         )
+        # ranked search fetches candidate units through the same lake
+        # hook (default threshold: the 3 units are fetched, not scanned)
+        ranked = DeltaSnapshotLake(spark, path, path + "_idx")
+        bidx = BM25Index()
+        ranked.build_index(bidx, "txt")
+        results[name + "_bm25"] = [
+            tuple(r)
+            for r in bm25_topk(ranked, bidx, "txt", "word3", 5, "k").collect()
+        ]
     assert results["mapped"] == results["plain"]
     assert len(results["plain"]) == len([i for i in range(200) if i % 7 == 3])
     assert results["mapped_exact"] == results["plain_exact"]
     assert [r[0] for r in results["plain_exact"]] == [42]
+    assert results["mapped_bm25"] == results["plain_bm25"]
+    assert [r[0] for r in results["plain_bm25"]] == [3, 10, 17, 24, 31]
     # and the search results carry LOGICAL column names
     assert all(len(r) == 2 for r in results["mapped"])
 

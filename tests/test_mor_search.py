@@ -10,7 +10,7 @@ searchable with its existing indexes."""
 import pyspark.sql.functions as F
 import pytest
 
-from rottnest_spark.indices.bm25 import BM25Index
+from rottnest_spark.indices.bm25 import BM25Index, bm25_topk
 from rottnest_spark.indices.exact import ExactIndex
 from rottnest_spark.indices.substring import SubstringIndex
 from rottnest_spark.sources.delta import DeltaSnapshotLake
@@ -94,6 +94,8 @@ def test_iceberg_topk_index_refuses_mor(spark, sf_dir, tmp_path):
     iceberg_delete_rows(spark, t, "doc_id = 1")
     with pytest.raises(ValueError, match="top-K"):
         lake.search(idx, "text", Q)
+    with pytest.raises(ValueError, match="top-K"):
+        bm25_topk(lake, idx, "text", Q, 5, "doc_id")
 
 
 def test_iceberg_search_with_unindexed_tail(spark, ilake):
@@ -147,6 +149,8 @@ def test_delta_search_exact_under_dvs(spark, sf_dir, tmp_path):
     assert _ids(lake.search(ExactIndex(), "doc_id", key)) == []
     with pytest.raises(ValueError, match="top-K"):
         lake.search(BM25Index(), "text", Q)
+    with pytest.raises(ValueError, match="top-K"):
+        bm25_topk(lake, BM25Index(), "text", Q, 5, "doc_id")
 
 
 def test_rowgroup_granularity_tags_positions(spark, sf_dir, tmp_path):

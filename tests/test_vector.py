@@ -266,6 +266,82 @@ def test_knn_topk_many_ivf_recall(spark, sf_dir, tmp_path):
         assert recall >= 0.8, (qid, recall)
 
 
+def test_knn_topk_many_pq_on_partitioned_delta(spark, tmp_path):
+    """PQ postings are row-group units. On a partitioned Delta table the
+    top-K fetch stays row-group precise (no partition column is needed);
+    once column mapping forces whole-file fetches, units of one file that
+    different query sets admitted must not fetch that file twice. Either
+    way each query's batched top-K equals its own single-query call."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rottnest_spark.indices.vector import knn_topk_many
+    from rottnest_spark.sources.delta import DeltaSnapshotLake
+    from rottnest_spark.sources.delta_write import (
+        delta_convert,
+        delta_rename_column,
+    )
+
+    # 8 well-separated clusters on a line, one row group each: file
+    # bucket=b holds clusters 4b..4b+3
+    rng = np.random.default_rng(3)
+    table = str(tmp_path / "t")
+    for b in range(2):
+        ids, vecs = [], []
+        for c in range(4 * b, 4 * b + 4):
+            for i in range(32):
+                v = rng.normal(scale=0.3, size=8)
+                v[0] += 10.0 * c
+                ids.append(c * 32 + i)
+                vecs.append([float(x) for x in v])
+        os.makedirs(f"{table}/bucket={b}")
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array(ids, pa.int64()),
+                    "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                }
+            ),
+            f"{table}/bucket={b}/part-0.parquet",
+            row_group_size=32,
+        )
+    delta_convert(table, partition_columns=["bucket"])
+    # nprobes=2: q1 admits clusters {0, 1}, q2 {1, 2} — three row groups
+    # of one file under three different query sets
+    queries = {
+        "q1": [4.0] + [0.0] * 7,
+        "q2": [14.0] + [0.0] * 7,
+        "q3": [54.0] + [0.0] * 7,
+    }
+    first = f"{table}/bucket=0/part-0.parquet"
+
+    for tag, id_col in (("partitioned", "vec_id"), ("mapped", "vid")):
+        if tag == "mapped":
+            delta_rename_column(table, "vec_id", "vid")
+        lake = DeltaSnapshotLake(spark, table, str(tmp_path / f"idx_{tag}"))
+        cols = [id_col, "embedding"]
+        unit_rows = lake._read_candidate_units([(first, 0)], cols).count()
+        assert unit_rows == (32 if tag == "partitioned" else 128), tag
+        idx = VectorIndex(rows_per_centroid=32, nprobes=2, pq_m=8, pq_k=16)
+        lake.build_index(idx, "embedding")
+        batched = knn_topk_many(lake, idx, "embedding", queries, 5, id_col)
+        got: dict[str, list] = {}
+        for r in batched.collect():
+            got.setdefault(r["__query__"], []).append((r[id_col], r["dist"]))
+        for qid, vec in queries.items():
+            single = [
+                (r[id_col], r["dist"])
+                for r in knn_topk_many(
+                    lake, idx, "embedding", {qid: vec}, 5, id_col
+                ).collect()
+            ]
+            assert len({i for i, _ in got[qid]}) == 5, (tag, qid, got[qid])
+            assert sorted(got[qid]) == sorted(single), (tag, qid)
+
+
 def test_cosine_knn_equals_numpy(spark):
     import numpy as np
 
